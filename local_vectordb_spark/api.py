@@ -44,8 +44,10 @@ anti-pattern).
 from __future__ import annotations
 
 import datetime as _dt
+import json
 import os
 import re
+import shutil
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -137,6 +139,21 @@ IVF_RETRAIN_FRACTION = 0.2
 # 8 below NSW_BEAM_KNEE rows, 16 at/above. An explicit ``beam=``
 # always wins — this only moves the DEFAULT off the measured cliff.
 NSW_BEAM_KNEE = 100_000
+
+
+def _seal(p: str, provenance: dict | None = None) -> None:
+    """Mark a stored index artifact complete: an incremental build's
+    provenance record first (which base it extends and how much of it
+    was rewritten — the operational record that its cost ∝ delta, and
+    the gate the incremental registry entry checks, so a silent
+    full-rebuild fallback can never masquerade as the maintained
+    path), then the ``_SUCCESS`` marker materialize_once and
+    _incremental_base look for."""
+    if provenance is not None:
+        with open(os.path.join(p, "provenance.json"), "w") as f:
+            json.dump(provenance, f)
+    with open(os.path.join(p, "_SUCCESS"), "w"):
+        pass
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -651,39 +668,33 @@ class VectorDB:
 
         The versioned snapshot is laid out hive-partitioned by
         ``bucket = pmod(xxhash64(id), B)`` — the same construction the
-        CDF consumer's mirror uses — so a delta commit rewrites ONLY
-        the buckets the delta touches (read partition-pruned from the
-        previous generation, broadcast-anti-joined against the changed
-        ids, unioned with the upserts) and HARD-LINKS every untouched
-        bucket directory from the previous generation: commit cost is
-        ∝ churn × (corpus/B), never ∝ corpus. Before r17 every commit
-        rewrote the whole table — the one remaining corpus-bound cost
-        in the write path after the index artifacts went incremental
-        (r13); a 20-row add to a 100 TB corpus must not rewrite
-        100 TB.
-
-        The derivation new = prev − changed_ids + upserts is the SAME
-        contract the incremental artifact builders and the CDF feed
-        already rely on (the delta IS the net change this commit
-        applies — api._write's docstring); a caller whose merged plan
-        disagreed with its recorded delta was already corrupting every
-        downstream consumer.
+        CDF consumer's mirror uses — so a delta commit is a
+        :func:`~local_vectordb_spark.operators.incremental.rewrite_partitions`
+        of the buckets its changed ids hash to: commit cost is ∝ churn
+        × (corpus/B), never ∝ corpus. Before r17 every commit rewrote
+        the whole table; a 20-row add to a 100 TB corpus must not
+        rewrite 100 TB. The derivation new = prev − changed_ids +
+        upserts is the SAME contract the incremental artifact builders
+        and the CDF feed already rely on (the delta IS the net change
+        this commit applies — api._write's docstring).
 
         Wholesale writes (delta=None — reset, initial bulk load — or a
         flat/differently-bucketed previous generation, a corpus that
-        outgrew its bucket sizing (see __init__), or a GC race on the
-        previous directory) write the merged ``df``: bucketed when a
-        delta chain could extend this commit (delta given), flat
-        otherwise. The bucket count is self-sized from the previous
-        generation's bytes unless the caller pinned one. A bucketed result that materialized ZERO parquet
-        files (a partitioned write of an empty table writes no files
-        and the generation would be unreadable) falls back to the flat
-        empty write. Readers never see the physical bucket column
+        outgrew its bucket sizing (see __init__), a null-bucket layout,
+        or a GC race on the previous directory) write the merged
+        ``df``: bucketed when a delta chain could extend this commit
+        (delta given), flat otherwise. The bucket count is self-sized
+        from the previous generation's bytes unless the caller pinned
+        one. Readers never see the physical bucket column
         (_read_version drops it)."""
         import math
-        import shutil as _shutil
 
-        from local_vectordb_spark.operators.incremental import link_tree
+        from local_vectordb_spark.operators.incremental import (
+            rewrite_partitions,
+        )
+        from local_vectordb_spark.sources.partitioned import (
+            write_partitioned,
+        )
 
         d = self._table_dir(kind)
         prev_dir = os.path.join(d, f"v{base}")
@@ -724,87 +735,38 @@ class VectorDB:
             extend = False
         bucket_of = F.pmod(F.xxhash64(F.col("id")), F.lit(B))
 
+        def _mark_buckets() -> None:
+            with open(os.path.join(stage, "_BUCKETS"), "w") as f:
+                f.write(str(B))
+
         if delta is not None and extend:
             ups, rem = delta
+            cols = [f.name for f in SCHEMAS[kind].fields]
             try:
                 changed = ups.select("id").unionByName(
                     rem.select("id")).distinct()
                 touched = [
-                    r.b for r in changed.select(
-                        F.pmod(F.xxhash64("id"), F.lit(B)).alias("b")
-                    ).distinct().collect()
+                    r.b for r in changed.select(bucket_of.alias("b"))
+                    .distinct().collect()
                 ]
-                prev_names = os.listdir(prev_dir)
-                # a null id in the delta hashes to a null bucket, and a
-                # generation holding null-id rows carries a
-                # bucket=__HIVE_DEFAULT_PARTITION__ dir: neither fits
-                # the numeric touched-set arithmetic (int() on that dir
-                # name aborted the whole commit pre-r18 — r17 ADVICE,
-                # low). Wholesale handles nulls like any other value,
-                # so route both cases there.
-                numeric = all(b is not None for b in touched) and all(
-                    n.split("=", 1)[1].lstrip("-").isdigit()
-                    for n in prev_names if n.startswith("bucket=")
-                )
-                if numeric:
-                    prev = self.spark.read.parquet(prev_dir)
-                    cols = [f.name for f in SCHEMAS[kind].fields]
-                    rewritten = (
-                        prev.filter(F.col("bucket").isin(touched))
-                        .drop("bucket")
-                        .join(F.broadcast(changed), "id", "left_anti")
-                        .unionByName(ups.select(*cols))
-                        .withColumn("bucket", bucket_of)
-                    )
-                    # one shuffle ON the bucket key before the
-                    # partitioned write: every bucket lands in exactly
-                    # one task, so the generation carries ONE file per
-                    # bucket instead of (tasks × buckets) — bounded
-                    # file counts under maintenance is as much a 100 TB
-                    # property as bounded bytes (the shuffle is
-                    # churn-sized here)
-                    rewritten.repartition("bucket").write.mode(
-                        "overwrite").partitionBy("bucket").parquet(stage)
-                    for name in prev_names:
-                        if (name.startswith("bucket=")
-                                and int(name.split("=", 1)[1])
-                                not in touched):
-                            link_tree(os.path.join(prev_dir, name),
-                                      os.path.join(stage, name))
-                    if any(n.endswith(".parquet")
-                           for _r, _dd, names in os.walk(stage)
-                           for n in names):
-                        with open(
-                            os.path.join(stage, "_BUCKETS"), "w"
-                        ) as f:
-                            f.write(str(B))
-                        return
-                    # the commit emptied the table (every bucket
-                    # touched, zero rows left): a partitioned dir with
-                    # no files is unreadable — take the flat empty
-                    # write below
-                    _shutil.rmtree(stage, ignore_errors=True)
+                if rewrite_partitions(
+                    self.spark, prev_dir, stage, ["bucket"], touched,
+                    changed, ups.select(*cols).withColumn("bucket", bucket_of),
+                ):
+                    _mark_buckets()
+                    return
             except (FileNotFoundError, AnalysisException):
                 # lost prev to a concurrent GC / unreadable layout:
                 # fall through to the wholesale write below
-                _shutil.rmtree(stage, ignore_errors=True)
+                shutil.rmtree(stage, ignore_errors=True)
 
         if delta is not None:
             # wholesale but BUCKETED: this is the layout-upgrade (or
-            # first post-bulk) commit later delta commits extend; the
-            # bucket-keyed repartition keeps it at one file per bucket
-            df.withColumn("bucket", bucket_of).repartition(
-                "bucket").write.mode("overwrite").partitionBy(
-                "bucket").parquet(stage)
-            has_files = any(
-                n.endswith(".parquet")
-                for _r, _d, names in os.walk(stage) for n in names
-            )
-            if has_files:
-                with open(os.path.join(stage, "_BUCKETS"), "w") as f:
-                    f.write(str(B))
-                return
-            _shutil.rmtree(stage, ignore_errors=True)  # empty table
+            # first post-bulk) commit later delta commits extend
+            write_partitioned(df.withColumn("bucket", bucket_of), stage,
+                              ["bucket"])
+            _mark_buckets()
+            return
 
         df.write.mode("overwrite").parquet(stage)
 
@@ -1882,116 +1844,115 @@ class VectorDB:
                 return w, steps
         return None
 
+    def _stored_artifact(self, prefix: str, version: int, incremental,
+                         full_build) -> str:
+        """Build protocol shared by the stored index artifacts: the
+        ``_{prefix}_v{version}`` directory beside the chunks table is
+        built AT MOST ONCE per table version across every process
+        sharing the store (materialize_once makes concurrent builders
+        race-safe), from the pinned `v{version}` snapshot, and GC'd
+        with its version in _write.
+
+        INCREMENTAL first (r13): with a previous artifact and a
+        complete delta chain, ``incremental(p, version, w, steps)``
+        extends it at delta cost and returns True (sealing ``p``
+        itself, provenance included). It returns False when it must
+        not extend (drift budget spent, invariant tripped, layout it
+        cannot carry); that, or losing the previous artifact to the
+        retention GC mid-read (the only two exception types that race
+        throws), falls back to ``full_build(p)``. Returns the
+        artifact path."""
+        from local_vectordb_spark.session import materialize_once
+
+        def _build(p: str) -> None:
+            inc = self._incremental_base("chunks", version, prefix)
+            if inc is not None:
+                try:
+                    if incremental(p, version, *inc):
+                        return
+                except (FileNotFoundError, AnalysisException):
+                    pass
+                shutil.rmtree(p, ignore_errors=True)
+            full_build(p)
+            _seal(p)
+
+        return materialize_once(
+            os.path.join(self._table_dir("chunks"), f"_{prefix}_v{version}"),
+            _build,
+        )
+
+    @staticmethod
+    def _sign_rows(chunks: DataFrame, S: int) -> DataFrame:
+        """Rows of the stored sign layout: (id, embedding), the 4-bit
+        sign ``bucket``, the SQ8 triple, and at S > 1 the id-hash
+        ``sub`` partition (see _sign_stored). Every column is a pure
+        expression of the row, so a rewritten bucket and a linked one
+        hold the same values."""
+        from local_vectordb_spark.functions import vector as V
+
+        rows = V.sq8_attach(chunks.select(
+            "id", "embedding",
+            ivf.sign_bucket("embedding", n_bits=4).alias("bucket"),
+        ))
+        if S > 1:
+            rows = rows.withColumn("sub", F.pmod(F.xxhash64("id"), F.lit(S)))
+        return rows
+
     def _sign_build_incremental(
         self, p: str, version: int, w: int, steps
-    ) -> None:
+    ) -> bool:
         """Incremental `_sign_v{version}` from `_sign_v{w}` + the
-        delta chain (r13): rewrite ONLY the bucket directories the net
-        delta touches (read partition-pruned from the previous layout,
-        minus touched ids, plus the upserted rows), and HARD-LINK
-        every untouched bucket's files from the previous artifact.
-        Produces the exact row set the full build would — buckets are
-        pure expressions of the vectors — at delta-plus-affected-
-        buckets cost instead of a corpus shuffle. With 16 buckets the
+        delta chain (r13): ``rewrite_partitions`` over the sign
+        buckets the net delta's old and new vectors fall in. Produces
+        the exact row set the full build would — buckets are pure
+        expressions of the vectors — at delta-plus-affected-buckets
+        cost instead of a corpus shuffle. With 16 buckets the
         fixture-scale saving is modest; the shape is what matters: the
         IVF twin below applies it across √n-thousands of cells."""
         from local_vectordb_spark.operators.incremental import (
             compose_delta_chain,
-            link_tree,
+            rewrite_partitions,
         )
 
-        from local_vectordb_spark.functions import vector as V
-
         ups, olds = compose_delta_chain(steps, key_col="id")
-        bucket = ivf.sign_bucket("embedding", n_bits=4).alias("bucket")
-        # the SQ8 triple is a pure expression of the vector, so the
-        # incrementally-rewritten buckets carry the same columns the
-        # linked ones already hold; a PRE-sq8 previous layout (no
-        # codes column) fails the `kept` select below with
-        # AnalysisException, which the caller catches — the full
-        # build upgrades the layout
-        ups_b = V.sq8_attach(ups.select("id", "embedding", bucket))
-        olds_b = olds.select("id", "embedding", bucket)
-        affected = {
-            r.bucket
-            for r in ups_b.select("bucket")
-            .unionByName(olds_b.select("bucket"))
-            .distinct()
-            .collect()
-        }
         prev_root = os.path.join(self._table_dir("chunks"), f"_sign_v{w}")
-        prev = os.path.join(prev_root, "layout")
-        layout = os.path.join(p, "layout")
         # carry the previous layout's sub width (r18): a rewritten
         # bucket must keep the SAME physical shape as the linked ones —
-        # partition discovery requires one schema across the tree. The
-        # sub column is a pure id expression, so recomputed values
-        # match the linked directories'. (Width upgrades land on the
-        # next FULL build; extension never re-layouts — same rule as
-        # the data snapshot's pinned-B mode.)
+        # partition discovery requires one schema across the tree.
+        # (Width upgrades land on the next FULL build; extension never
+        # re-layouts — same rule as the data snapshot's pinned-B mode.)
         try:
             with open(os.path.join(prev_root, "_SUBS")) as f:
                 S = max(1, int(f.read().strip()))
         except (OSError, ValueError):
             S = 1
-        if affected:
-            touched = (
-                ups.select("id").unionByName(olds.select("id")).distinct()
-            )
-            kept = (
-                self.spark.read.parquet(prev)
-                .filter(F.col("bucket").isin(sorted(affected)))
-                .join(touched, "id", "left_anti")
-                .select(
-                    "id", "embedding", "bucket", "vmin", "vmax", "codes"
-                )
-            )
-            out = kept.unionByName(ups_b)
-            if S > 1:
-                (
-                    out.withColumn(
-                        "sub", F.pmod(F.xxhash64("id"), F.lit(S))
-                    )
-                    .repartition("bucket", "sub")
-                    .write.mode("overwrite")
-                    .partitionBy("bucket", "sub")
-                    .parquet(layout)
-                )
-            else:
-                out.write.mode("overwrite").partitionBy(
-                    "bucket"
-                ).parquet(layout)
-        else:  # net-empty chain: every bucket carries over untouched
-            os.makedirs(layout, exist_ok=True)
+        new_rows = self._sign_rows(ups, S)
+        affected = sorted(
+            r.bucket
+            for r in new_rows.select("bucket")
+            .unionByName(olds.select(
+                ivf.sign_bucket("embedding", n_bits=4).alias("bucket")))
+            .distinct()
+            .collect()
+        )
+        # a PRE-sq8 previous layout (no codes column) fails the kept
+        # rows' select with AnalysisException: the full build upgrades
+        if not rewrite_partitions(
+            self.spark, os.path.join(prev_root, "layout"),
+            os.path.join(p, "layout"),
+            ["bucket", "sub"] if S > 1 else ["bucket"], affected,
+            ups.select("id").unionByName(olds.select("id")), new_rows,
+        ):
+            return False
         if S > 1:
             with open(os.path.join(p, "_SUBS"), "w") as f:
                 f.write(str(S))
-        for name in os.listdir(prev):
-            if (
-                name.startswith("bucket=")
-                and int(name.split("=", 1)[1]) not in affected
-            ):
-                link_tree(
-                    os.path.join(prev, name), os.path.join(layout, name)
-                )
-        # provenance: which base this artifact extends and how much of
-        # it was rewritten — the operational record that says "this
-        # generation's index cost ∝ delta" (and the loud gate the
-        # incremental registry entry checks, so a silent full-rebuild
-        # fallback can never masquerade as the maintained path)
-        import json as _json
-
-        with open(os.path.join(p, "provenance.json"), "w") as f:
-            _json.dump(
-                {
-                    "base_version": w,
-                    "chain_commits": len(steps),
-                    "buckets_rewritten": sorted(affected),
-                },
-                f,
-            )
-        with open(os.path.join(p, "_SUCCESS"), "w"):
-            pass
+        _seal(p, {
+            "base_version": w,
+            "chain_commits": len(steps),
+            "buckets_rewritten": affected,
+        })
+        return True
 
     def _ivf_build_incremental(
         self, p: str, version: int, w: int, steps
@@ -2000,9 +1961,9 @@ class VectorDB:
         chain (r13): FREEZE the trained centroids (and their supercell
         level — centroids unchanged means the coarse quantizer carries
         over verbatim), assign only the net-upserted rows to cells
-        (``ivf.assign_cells`` — |delta|·k flops, no KMeans fit),
-        rewrite only the affected cell directories, hard-link the
-        rest. Cumulative drift is tracked in centroids.json; past
+        (``ivf.assign_cells`` — |delta|·k flops, no KMeans fit), and
+        ``rewrite_partitions`` over the affected cells. Cumulative
+        drift is tracked in centroids.json; past
         ``IVF_RETRAIN_FRACTION`` of the trained corpus size this
         returns False and the caller retrains from scratch (frozen
         cells only describe data that mostly IS the trained data).
@@ -2012,18 +1973,18 @@ class VectorDB:
         rather than shipping a stale row. At 100 TB this is the write
         path's difference between per-commit index cost ∝ corpus
         (KMeans fit + full shuffle) and ∝ delta + touched cells."""
-        import json as _json
-
         from local_vectordb_spark.operators.incremental import (
             compose_delta_chain,
-            link_tree,
+            rewrite_partitions,
         )
 
         prev_dir = os.path.join(self._table_dir("chunks"), f"_ivf_v{w}")
         with open(os.path.join(prev_dir, "centroids.json")) as f:
-            data = _json.load(f)
-        if not isinstance(data, dict) or "n_at_train" not in data:
-            return False  # pre-r13 artifact: no drift ledger to extend
+            data = json.load(f)
+        if not isinstance(data, dict) or not data.get("n_at_train"):
+            # a pre-r13 artifact has no drift ledger to extend; an
+            # emptied generation's has no cells to assign to
+            return False
         ups, olds = compose_delta_chain(steps, key_col="id")
         # materialize the delta-sized frames once: counted here, then
         # reused for assignment + the anti-join
@@ -2037,13 +1998,13 @@ class VectorDB:
         cells = data["cells"]
         new_asg = ivf.assign_cells(ups, cells, id_col="id", vec_col="embedding")
         old_asg = ivf.assign_cells(olds, cells, id_col="id", vec_col="embedding")
-        affected = {
+        affected = sorted(
             r.cluster_id
             for r in new_asg.select("cluster_id")
             .unionByName(old_asg.select("cluster_id"))
             .distinct()
             .collect()
-        }
+        )
         prev_asg = os.path.join(prev_dir, "assignments")
         # the count invariant below guards exactly one failure mode: a
         # REMOVED row whose recomputed cell missed its stored
@@ -2055,37 +2016,17 @@ class VectorDB:
             self.spark.read.parquet(prev_asg).count() if n_olds else None
         )
         out_dir = os.path.join(p, "assignments")
-        if affected:
-            touched = (
-                ups.select("id").unionByName(olds.select("id")).distinct()
-            )
-            # the layout carries embeddings (r18): kept rows keep
-            # theirs from the previous artifact; upserts take theirs
-            # from the delta. A pre-r18 artifact (no embedding column)
-            # fails this select with AnalysisException and the caller
-            # upgrades via full rebuild.
-            kept = (
-                self.spark.read.parquet(prev_asg)
-                .filter(F.col("cluster_id").isin(sorted(affected)))
-                .join(touched, "id", "left_anti")
-                .select("id", "embedding", "cluster_id")
-            )
-            ups_rows = new_asg.join(ups, "id").select(
-                "id", "embedding", "cluster_id"
-            )
-            kept.unionByName(ups_rows).write.mode(
-                "overwrite"
-            ).partitionBy("cluster_id").parquet(out_dir)
-        else:
-            os.makedirs(out_dir, exist_ok=True)
-        for name in os.listdir(prev_asg):
-            if (
-                name.startswith("cluster_id=")
-                and int(name.split("=", 1)[1]) not in affected
-            ):
-                link_tree(
-                    os.path.join(prev_asg, name), os.path.join(out_dir, name)
-                )
+        # the layout carries embeddings (r18): kept rows keep theirs
+        # from the previous artifact, upserts take theirs from the
+        # delta. A pre-r18 artifact (no embedding column) fails the
+        # kept rows' select with AnalysisException and the caller
+        # upgrades via full rebuild.
+        if not rewrite_partitions(
+            self.spark, prev_asg, out_dir, ["cluster_id"], affected,
+            ups.select("id").unionByName(olds.select("id")),
+            new_asg.join(ups, "id").select("id", "embedding", "cluster_id"),
+        ):
+            return False
         if prev_count is not None:
             got = self.spark.read.parquet(out_dir).count()
             if got != prev_count - n_olds + n_ups:
@@ -2099,96 +2040,86 @@ class VectorDB:
         meta = dict(data)
         meta["drift"] = data["drift"] + n_ups + n_olds
         with open(os.path.join(p, "centroids.json"), "w") as f:
-            _json.dump(meta, f)
-        # provenance, like the sign builder: the operational record
-        # that this generation's index cost ∝ delta + touched cells
-        with open(os.path.join(p, "provenance.json"), "w") as f:
-            _json.dump(
-                {
-                    "base_version": w,
-                    "chain_commits": len(steps),
-                    "cells_rewritten": sorted(affected),
-                    "cells_total": len(cells),
-                },
-                f,
-            )
-        with open(os.path.join(p, "_SUCCESS"), "w"):
-            pass
+            json.dump(meta, f)
+        _seal(p, {
+            "base_version": w,
+            "chain_commits": len(steps),
+            "cells_rewritten": affected,
+            "cells_total": len(cells),
+        })
         return True
 
     def _ivf_stored(self, version: int):
         """PERSISTED IVF index (r10): centroids (json) + assignments
-        (parquet) live beside the table data as `_ivf_v{version}` and
-        are built AT MOST ONCE PER TABLE VERSION across every process
-        sharing the store — train-once/serve-many, where the in-memory
-        cache alone retrained KMeans per process per version (at 100 TB
-        an index build is a batch job, never a per-reader side effect).
-        Built from the pinned `v{version}` snapshot, not the live
-        pointer, so a concurrent commit can't mislabel the artifact;
-        materialize_once makes concurrent builders race-safe; GC rides
-        the table-version GC in _write."""
-        import json as _json
+        (parquet) live beside the table data as `_ivf_v{version}`,
+        train-once/serve-many through _stored_artifact — the in-memory
+        cache alone retrained KMeans per process per version (at
+        100 TB an index build is a batch job, never a per-reader side
+        effect)."""
+        import math as _math
 
-        from local_vectordb_spark.session import materialize_once
+        from local_vectordb_spark.sources.partitioned import (
+            write_partitioned,
+        )
 
-        path = os.path.join(self._table_dir("chunks"), f"_ivf_v{version}")
-
-        def _build(p: str) -> None:
-            import math as _math
-            import shutil as _shutil
-
-            # INCREMENTAL first (r13): previous artifact + complete
-            # delta chain → frozen-centroid maintenance at delta cost.
-            # Falls through to the full build when no base exists, the
-            # drift budget is spent, the count invariant trips, or the
-            # previous artifact loses the race to the retention GC
-            # mid-read (the only two exception types that race throws).
-            inc = self._incremental_base("chunks", version, "ivf")
-            if inc is not None:
-                try:
-                    if self._ivf_build_incremental(p, version, *inc):
-                        return
-                except (FileNotFoundError, AnalysisException):
-                    pass
-                _shutil.rmtree(p, ignore_errors=True)
-
+        def _full_build(p: str) -> None:
             chunks = self.table("chunks", version=version)
             n = chunks.count()
-            # √n cells (r10 verdict #5 — the classic IVF shape; SURVEY
-            # X3's k=100 reference point lands at n=10k): per-probe
-            # candidate work scales as n/√n = √n instead of n/16, the
-            # difference between an index and a 1/16th-corpus scan at
-            # millions of rows. Bounded by n//4 so tiny fixtures keep
-            # >1-member cells, and by 4096 cells — the bound is the
-            # KMeans TRAIN cost (every iteration scans its input × k
-            # centroids), which ivf_build's sampled fit relieves past
-            # TRAIN_SAMPLE_MAX rows; routing past the flat regime is
-            # handled by the two-level coarse quantizer below (r11
-            # verdict #6), so the cap marks where cells get coarser
-            # than √n, not where the index stops working.
-            k_clusters = max(2, min(4096, int(_math.isqrt(n)), n // 4))
-            _, cents, assigns = ivf.ivf_build(
-                chunks, n_clusters=k_clusters, id_col="id", n_rows=n
-            )
-            # two-level coarse quantizer past the dispatch (r11 verdict
-            # #6): √k supercells trained over the k cell centroids
-            # (driver-side numpy — the input is index metadata, k×dim),
-            # persisted with the cells; probes then route
-            # supercell→cell in ~(√k + n_super·√k) flops instead of
-            # ranking all k cells per query, driver-side AND in the
-            # distributed batch probe. Below the dispatch the flat
-            # bare-list format is written unchanged (old artifacts and
-            # small stores read identically).
-            if k_clusters >= IVF_TWO_LEVEL_MIN_CELLS:
-                supers, c2s = ivf.train_supercells(
-                    cents, n_super=max(2, int(_math.isqrt(k_clusters)))
+            if n:
+                # √n cells (r10 verdict #5 — the classic IVF shape;
+                # SURVEY X3's k=100 reference point lands at n=10k):
+                # per-probe candidate work scales as n/√n = √n instead
+                # of n/16, the difference between an index and a
+                # 1/16th-corpus scan at millions of rows. Bounded by
+                # n//4 so tiny fixtures keep >1-member cells, and by
+                # 4096 cells — the bound is the KMeans TRAIN cost (every
+                # iteration scans its input × k centroids), which
+                # ivf_build's sampled fit relieves past TRAIN_SAMPLE_MAX
+                # rows; routing past the flat regime is handled by the
+                # two-level coarse quantizer below (r11 verdict #6), so
+                # the cap marks where cells get coarser than √n, not
+                # where the index stops working.
+                k_clusters = max(2, min(4096, int(_math.isqrt(n)), n // 4))
+                _, cents, assigns = ivf.ivf_build(
+                    chunks, n_clusters=k_clusters, id_col="id", n_rows=n
                 )
-                cents = {
-                    "cells": cents, "supercells": supers,
-                    "cell_to_super": c2s,
-                }
+                # two-level coarse quantizer past the dispatch (r11
+                # verdict #6): √k supercells trained over the k cell
+                # centroids (driver-side numpy — the input is index
+                # metadata, k×dim), persisted with the cells; probes
+                # then route supercell→cell in ~(√k + n_super·√k) flops
+                # instead of ranking all k cells per query, driver-side
+                # AND in the distributed batch probe. Below the
+                # dispatch the flat bare-list format is written
+                # unchanged (old artifacts and small stores read
+                # identically).
+                if k_clusters >= IVF_TWO_LEVEL_MIN_CELLS:
+                    supers, c2s = ivf.train_supercells(
+                        cents, n_super=max(2, int(_math.isqrt(k_clusters)))
+                    )
+                    cents = {
+                        "cells": cents, "supercells": supers,
+                        "cell_to_super": c2s,
+                    }
+                else:
+                    cents = {"cells": cents}
+                # The EMBEDDING rides in the cell partitions (r18, the
+                # sign layout's r11 move applied to the trained tier):
+                # without it every search semi-joined the full base
+                # table for candidate vectors — a corpus-wide
+                # fat-column scan per query; with it the probed cells'
+                # embedding bytes come partition-pruned from the
+                # artifact and the base contributes only its id set.
+                # Storage = one more hard-link-maintained corpus copy,
+                # the same trade `_sign_v{N}` made.
+                assigns = assigns.join(chunks.select("id", "embedding"), "id")
             else:
-                cents = {"cells": cents}
+                # an emptied generation: no cells to train, and a probe
+                # over none finds no rows — the cosine tier's answer
+                cents = {"cells": []}
+                assigns = chunks.select(
+                    "id", "embedding", F.lit(0).alias("cluster_id")
+                )
             # drift ledger (r13): a FULL build is a fresh train — the
             # incremental path extends it until the cumulative
             # upsert+remove volume crosses IVF_RETRAIN_FRACTION of
@@ -2198,29 +2129,19 @@ class VectorDB:
             # PARTITION the stored assignments by cell: ivf_search's
             # probe filter (cluster_id isin [...]) then prunes whole
             # directories at the scan — a probe reads n_probe/k of the
-            # index FILES, not a full scan filtered row-by-row (the
-            # plan-level difference between an index and a table;
-            # pinned by tests/test_plans.py). The EMBEDDING rides in
-            # the cell partitions (r18, the sign layout's r11 move
-            # applied to the trained tier): without it every search
-            # semi-joined the full base table for candidate vectors —
-            # a corpus-wide fat-column scan per query; with it the
-            # probed cells' embedding bytes come partition-pruned from
-            # the artifact and the base contributes only its id set.
-            # Storage = one more hard-link-maintained corpus copy,
-            # the same trade `_sign_v{N}` made.
-            assigns = assigns.join(chunks.select("id", "embedding"), "id")
-            assigns.write.mode("overwrite").partitionBy("cluster_id").parquet(
-                os.path.join(p, "assignments")
+            # index FILES, not a full scan filtered row-by-row (pinned
+            # by tests/test_plans.py)
+            write_partitioned(
+                assigns, os.path.join(p, "assignments"), ["cluster_id"]
             )
             with open(os.path.join(p, "centroids.json"), "w") as f:
-                _json.dump(cents, f)
-            with open(os.path.join(p, "_SUCCESS"), "w"):
-                pass
+                json.dump(cents, f)
 
-        materialize_once(path, _build)
+        path = self._stored_artifact(
+            "ivf", version, self._ivf_build_incremental, _full_build
+        )
         with open(os.path.join(path, "centroids.json")) as f:
-            data = _json.load(f)
+            data = json.load(f)
         # dict with supercells = the two-level format; dict without =
         # the flat regime carrying the r13 drift ledger; bare list =
         # every pre-r13 flat artifact — all three stay readable forever
@@ -2258,84 +2179,45 @@ class VectorDB:
         PRUNING (the scan reads ~(n_bits+1)/2^n_bits of the FILES; the
         plan shows PartitionFilters, pinned in tests/test_plans.py).
         This is the layout the `auto` strategy serves past
-        AUTO_BRUTE_MAX, i.e. the 100 TB default path. Same contract as
-        the other stored artifacts: built at most once per table
-        version across processes (materialize_once), pinned to the
-        `v{version}` snapshot, GC'd with its version."""
-        from local_vectordb_spark.session import materialize_once
+        AUTO_BRUTE_MAX, i.e. the 100 TB default path. Same build
+        protocol as the other stored artifacts (_stored_artifact).
 
-        path = os.path.join(self._table_dir("chunks"), f"_sign_v{version}")
+        The SQ8 column triple rides in the SAME layout files (r18):
+        parquet is columnar, so the sign tier's (id, embedding) scans
+        never touch the code columns and the sq8 tier's (id, codes,
+        vmin, vmax) scans never touch the fp column — one artifact,
+        column pruning picks the bytes. Storage cost ~0.31x of the
+        fp32 column (measured at XL); no second
+        build/GC/bundle/incremental machinery.
 
-        def _build(p: str) -> None:
-            import shutil as _shutil
+        r18 (r17 verdict #7): the SAME self-sizing policy the data
+        snapshot uses, applied to the artifact layout. The 16 sign
+        buckets are SEMANTIC (4 sign bits — more would change the probe
+        set and every oracle), so the scale lever is a physical id-hash
+        SUB-partition under each sign bucket: one (bucket, sub) leaf ≈
+        one task-sized split. At 100 TB a flat 16-bucket layout is
+        ~6 TB per partition directory; with subs the probe still prunes
+        on `bucket` (top-level dirs) and each pruned read is
+        task-shaped. S resolves to 1 at fixture scale — the pre-r18
+        layout and plans."""
+        from local_vectordb_spark.sources.partitioned import (
+            write_partitioned,
+        )
 
-            # INCREMENTAL first (r13): previous layout + complete
-            # delta chain → rewrite only the touched buckets and
-            # hard-link the rest; identical row set to the full build
-            # (buckets are pure vector expressions). Falls through on
-            # a broken chain or on losing the previous artifact to the
-            # retention GC mid-build.
-            inc = self._incremental_base("chunks", version, "sign")
-            if inc is not None:
-                try:
-                    self._sign_build_incremental(p, version, *inc)
-                    return
-                except (FileNotFoundError, AnalysisException):
-                    _shutil.rmtree(p, ignore_errors=True)
-
-            from local_vectordb_spark.functions import vector as V
-
-            chunks = self.table("chunks", version=version)
-            # the SQ8 column triple rides in the SAME layout files
-            # (r18): parquet is columnar, so the sign tier's
-            # (id, embedding) scans never touch the code columns and
-            # the sq8 tier's (id, codes, vmin, vmax) scans never touch
-            # the fp column — one artifact, column pruning picks the
-            # bytes. Storage cost ~0.31x of the fp32 column (measured
-            # at XL); no second
-            # build/GC/bundle/incremental machinery.
-            sel = V.sq8_attach(
-                chunks.select(
-                    "id",
-                    "embedding",
-                    ivf.sign_bucket("embedding", n_bits=4).alias("bucket"),
-                )
-            )
-            # r18 (r17 verdict #7): the SAME self-sizing policy the
-            # data snapshot uses, applied to the artifact layout. The
-            # 16 sign buckets are SEMANTIC (4 sign bits — more would
-            # change the probe set and every oracle), so the scale
-            # lever is a physical id-hash SUB-partition under each
-            # sign bucket: one (bucket, sub) leaf ≈ one task-sized
-            # split. At 100 TB a flat 16-bucket layout is ~6 TB per
-            # partition directory; with subs the probe still prunes
-            # on `bucket` (top-level dirs) and each pruned read is
-            # task-shaped. S resolves to 1 at fixture scale — the
-            # pre-r18 layout and plans, byte-identical.
+        def _full_build(p: str) -> None:
             S = self._sign_subs(version)
+            write_partitioned(
+                self._sign_rows(self.table("chunks", version=version), S),
+                os.path.join(p, "layout"),
+                ["bucket", "sub"] if S > 1 else ["bucket"],
+            )
             if S > 1:
-                (
-                    sel.withColumn(
-                        "sub", F.pmod(F.xxhash64("id"), F.lit(S))
-                    )
-                    # one shuffle on the leaf key: one file per
-                    # (bucket, sub), bounded file counts (same
-                    # rationale as _write_data's repartition)
-                    .repartition("bucket", "sub")
-                    .write.mode("overwrite")
-                    .partitionBy("bucket", "sub")
-                    .parquet(os.path.join(p, "layout"))
-                )
                 with open(os.path.join(p, "_SUBS"), "w") as f:
                     f.write(str(S))
-            else:
-                sel.write.mode("overwrite").partitionBy("bucket").parquet(
-                    os.path.join(p, "layout")
-                )
-            with open(os.path.join(p, "_SUCCESS"), "w"):
-                pass
 
-        materialize_once(path, _build)
+        path = self._stored_artifact(
+            "sign", version, self._sign_build_incremental, _full_build
+        )
         # the physical sub column (when present) is layout, not data —
         # consumers see the same (id, embedding, bucket) frame at any S
         return self._cached_parquet(
@@ -2345,43 +2227,20 @@ class VectorDB:
     def _graph_stored(self, version: int) -> DataFrame:
         """PERSISTED kNN graph for the nsw strategy (r10): (src, dst,
         score) edges live beside the table data as `_nsw_v{version}`,
-        built at most once per table version across processes, so each
-        nsw search pays ONLY the fixed-hop beam traversal. The graph
-        the reference persists on its collection
-        (src/models/collection.py:251), as a shared stored artifact
-        instead of per-process state. SIZE-DISPATCHED build (r10
-        verdict #1): up to NSW_EXACT_BUILD_MAX rows the exact
-        id-type-agnostic batch form (the corpus as its own query table
-        through knn.knn_batch_table — one scan against the broadcast
-        query matrix, O(n²) scoring, uuid string ids); PAST the knee
-        the LSH-bucketed graph tier (ann.knn_graph_lsh via
+        built through _stored_artifact, so each nsw search pays ONLY
+        the fixed-hop beam traversal. The graph the reference persists
+        on its collection (src/models/collection.py:251), as a shared
+        stored artifact instead of per-process state. SIZE-DISPATCHED
+        build (r10 verdict #1): up to NSW_EXACT_BUILD_MAX rows the
+        exact id-type-agnostic batch form (the corpus as its own query
+        table through knn.knn_batch_table — one scan against the
+        broadcast query matrix, O(n²) scoring, uuid string ids); PAST
+        the knee the LSH-bucketed graph tier (ann.knn_graph_lsh via
         _lsh_graph_edges — sub-all-pairs candidate generation, the
         form measured at 22.6 s vs 1564 s for exact at 200k vectors,
-        BENCH_scale.json). Rides the same retention GC as the table
-        versions."""
-        import json as _json
+        BENCH_scale.json)."""
 
-        from local_vectordb_spark.session import materialize_once
-
-        path = os.path.join(self._table_dir("chunks"), f"_nsw_v{version}")
-
-        def _build(p: str) -> None:
-            import shutil as _shutil
-
-            # INCREMENTAL first (r13): previous graph + complete delta
-            # chain → per-delta kNN insertion with bidirectional edges,
-            # no corpus-wide graph build. Falls through on a broken
-            # chain, a spent drift budget, an oversized delta, or
-            # losing the previous artifact to the retention GC.
-            inc = self._incremental_base("chunks", version, "nsw")
-            if inc is not None:
-                try:
-                    if self._nsw_build_incremental(p, version, *inc):
-                        return
-                except (FileNotFoundError, AnalysisException):
-                    pass
-                _shutil.rmtree(p, ignore_errors=True)
-
+        def _full_build(p: str) -> None:
             chunks = self.table("chunks", version=version)
             n = chunks.count()
             if n > NSW_EXACT_BUILD_MAX:
@@ -2408,12 +2267,11 @@ class VectorDB:
             # datum the incremental inserter extends until drift
             # (cumulative churn) spends IVF_RETRAIN_FRACTION of it
             with open(os.path.join(p, "meta.json"), "w") as f:
-                _json.dump({"n_at_build": n, "drift": 0}, f)
-            with open(os.path.join(p, "_SUCCESS"), "w"):
-                pass
+                json.dump({"n_at_build": n, "drift": 0}, f)
 
-        materialize_once(path, _build)
-        return self._nsw_edges_df(path)
+        return self._nsw_edges_df(self._stored_artifact(
+            "nsw", version, self._nsw_build_incremental, _full_build
+        ))
 
     def _nsw_edges_df(self, p: str) -> DataFrame:
         """The stored graph's LOGICAL edge set. A full build writes one
@@ -2484,8 +2342,6 @@ class VectorDB:
         re-compacts the layers). Deltas past NSW_EXACT_BUILD_MAX rows
         fall back (their broadcast matrix stops being "small"; at that
         size the LSH builder is the right tool anyway)."""
-        import json as _json
-
         from local_vectordb_spark.operators.incremental import (
             compose_delta_chain,
             link_tree,
@@ -2496,7 +2352,7 @@ class VectorDB:
         if not os.path.exists(meta_path):
             return False  # pre-r13 artifact: no ledger to extend
         with open(meta_path) as f:
-            meta = _json.load(f)
+            meta = json.load(f)
         ups, olds = compose_delta_chain(steps, key_col="id")
         ups = ups.select("id", "embedding").localCheckpoint(eager=True)
         olds = olds.select("id").localCheckpoint(eager=True)
@@ -2583,26 +2439,20 @@ class VectorDB:
         adds.write.mode("overwrite").parquet(os.path.join(p, "edges_add"))
         link_tree(os.path.join(prev_dir, "edges"), os.path.join(p, "edges"))
         with open(os.path.join(p, "meta.json"), "w") as f:
-            _json.dump(
+            json.dump(
                 {
                     "n_at_build": meta["n_at_build"],
                     "drift": meta["drift"] + n_ups + n_olds,
                 },
                 f,
             )
-        with open(os.path.join(p, "provenance.json"), "w") as f:
-            _json.dump(
-                {
-                    "base_version": w,
-                    "chain_commits": len(steps),
-                    "nodes_inserted": n_ups,
-                    "nodes_removed": n_olds,
-                    "layered": True,
-                },
-                f,
-            )
-        with open(os.path.join(p, "_SUCCESS"), "w"):
-            pass
+        _seal(p, {
+            "base_version": w,
+            "chain_commits": len(steps),
+            "nodes_inserted": n_ups,
+            "nodes_removed": n_olds,
+            "layered": True,
+        })
         return True
 
     # ---------------- serving export (r16) ----------------

@@ -595,7 +595,7 @@ def simhash_votes_arrow(
             values = lst.values.to_numpy(zero_copy_only=False)
             sig = np.zeros(n, dtype=np.uint64)
             t = len(values)
-            if t and cnt.max() > 0:
+            if t:
                 # bit matrix (t, 64): column j = bit j of the int64's
                 # two's-complement representation == (h >> j) & 1
                 bits = np.unpackbits(
@@ -603,16 +603,17 @@ def simhash_votes_arrow(
                     axis=1,
                     bitorder="little",
                 )[:, :n_bits]
-                # per-row popcount of each bit column; reduceat yields
-                # x[idx[i]] (not 0) for empty segments and rejects
-                # idx == t — clamp, then zero empty/null rows below
-                starts = np.minimum(offsets[:-1], t - 1)
-                ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
-                packed = (
+                # per-row popcount of each bit column as an exact
+                # segment sum over a prefix sum: an empty row's segment
+                # is empty, so it counts 0 ones and votes bit 0 (int32:
+                # a batch never holds 2^31 tokens, half int64's memory)
+                csum = np.zeros((t + 1, n_bits), dtype=np.int32)
+                np.cumsum(bits, axis=0, dtype=np.int32, out=csum[1:])
+                ones = csum[offsets[1:]] - csum[offsets[:-1]]
+                sig = (
                     ((2 * ones > cnt[:, None]).astype(np.uint64) << shifts)
                     .sum(axis=1, dtype=np.uint64)
                 )
-                sig = np.where(cnt > 0, packed, np.uint64(0))
             if lst.null_count:
                 sig[lst.is_null().to_numpy(zero_copy_only=False)] = 0
             yield pa.RecordBatch.from_arrays(

@@ -1,27 +1,33 @@
-"""Delta-chain composition and file-level artifact reuse — the
-machinery behind INCREMENTAL index maintenance (r13).
+"""Delta-chain composition and copy-on-write partition maintenance —
+the machinery behind INCREMENTAL upkeep of every partitioned layout
+the store writes (r13).
 
-The versioned store commits a full copy-on-write snapshot per write
-generation, and every index artifact (`_ivf/_nsw/_sign_v{N}`) was
-rebuilt from a full corpus scan of its generation. But the write path
-KNOWS its delta exactly — `add` knows the accepted rows, `delete`
-knows the removed rows, `update` knows both sides — so since r13 each
-commit records that delta beside the snapshot (``v{N}/_delta``:
-``upserts`` = the new full rows, ``removes`` = the displaced old full
-rows), the row-level analogue of a Delta-Lake/Iceberg transaction
-log's add/remove file actions. An artifact build for generation N
-that finds an artifact for an earlier retained generation w plus a
-complete delta chain w+1..N can then do maintenance work proportional
-to the DELTA and the partitions it touches, instead of to the corpus:
+The versioned store commits a copy-on-write snapshot per write
+generation, and the write path KNOWS its delta exactly — `add` knows
+the accepted rows, `delete` knows the removed rows, `update` knows
+both sides — so each commit records that delta beside the snapshot
+(``v{N}/_delta``: ``upserts`` = the new full rows, ``removes`` = the
+displaced old full rows), the row-level analogue of a
+Delta-Lake/Iceberg transaction log's add/remove file actions. A new
+generation of a partitioned layout then costs work proportional to
+the DELTA and the partitions it touches, instead of to the corpus:
 
-- compose the chain into (final upserted rows, displaced old rows) —
-  pure delta-sized DataFrame algebra, :func:`compose_delta_chain`;
-- rewrite only the partition directories (sign buckets / IVF cells)
-  those rows live in;
-- HARD-LINK every untouched partition's files from the previous
-  artifact (:func:`link_tree`) — file-level reuse, the filesystem
-  form of Iceberg's unchanged-data-file manifest reuse; on an object
-  store this is a metadata copy either way.
+- compose a chain of deltas into (final upserted rows, displaced old
+  rows) — pure delta-sized DataFrame algebra,
+  :func:`compose_delta_chain`;
+- rewrite only the partition directories those rows live in and
+  HARD-LINK every untouched partition's files from the previous
+  generation — :func:`rewrite_partitions` over :func:`link_tree`,
+  the filesystem form of Iceberg's unchanged-data-file manifest
+  reuse (on an object store a metadata copy either way).
+
+:func:`rewrite_partitions` serves four layouts, each of which only
+says which partitions a delta touches: the data snapshot
+(``v{N}/bucket=`` by id hash), the sign layout
+(``_sign_v{N}/layout/bucket=[/sub=]`` by sign bits), the IVF
+assignments (``_ivf_v{N}/assignments/cluster_id=`` by frozen-centroid
+cell) and the CDF consumer's mirror (``data_v{N}/bucket=`` by id
+hash).
 
 At 100 TB this is the difference between "a 1k-row write costs a
 KMeans retrain plus a full corpus shuffle before the next search" and
@@ -36,8 +42,10 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from local_vectordb_spark.sources.partitioned import write_partitioned
 
 
 def compose_delta_chain(
@@ -146,3 +154,58 @@ def link_tree(src: str, dst: str) -> None:
                 raise
             except OSError:
                 shutil.copy2(s, t)
+
+
+def rewrite_partitions(
+    spark: SparkSession,
+    prev: str,
+    out: str,
+    cols: list[str],
+    touched,
+    changed_ids: DataFrame,
+    new_rows: DataFrame,
+) -> bool:
+    """Write the next generation of the partitioned layout at ``prev``
+    into ``out``: ``(prev rows in touched partitions − changed_ids) ∪
+    new_rows`` through :func:`write_partitioned`, then every untouched
+    top-level partition directory of ``prev`` hard-linked
+    (:func:`link_tree`). Cost ∝ delta + touched partitions.
+
+    ``cols`` are the partition columns, outermost first; ``touched``
+    holds the ``cols[0]`` values the delta lands in (old and new
+    sides). ``changed_ids`` is a delta-sized frame with an ``id``
+    column (it is broadcast); ``new_rows`` carries every layout
+    column, partition columns included. An emptied result is written
+    as :func:`write_partitioned`'s schema-bearing flat parquet, and a
+    ``prev`` without partition dirs is taken for one (no rows kept).
+
+    Returns False, having written nothing, for a null touched key or
+    a non-numeric partition dir in ``prev`` (hive names a null
+    partition value ``__HIVE_DEFAULT_PARTITION__``): integer partition
+    arithmetic does not cover them, so the caller takes its wholesale
+    path, which handles nulls like any other value."""
+    key = cols[0]
+    names = [n for n in os.listdir(prev) if n.startswith(f"{key}=")]
+    if None in touched or not all(
+        n.split("=", 1)[1].lstrip("-").isdigit() for n in names
+    ):
+        return False
+    touched = set(touched)
+    keep = [n for n in names if int(n.split("=", 1)[1]) not in touched]
+    if touched or not keep:
+        rows = new_rows
+        if names:  # else prev is an emptied generation: nothing to keep
+            rows = (
+                spark.read.parquet(prev)
+                .filter(F.col(key).isin(sorted(touched)))
+                .join(F.broadcast(changed_ids.select("id")), "id", "left_anti")
+                .select(*new_rows.columns)
+                .unionByName(new_rows)
+            )
+        if not write_partitioned(rows, out, cols) and keep:
+            # the touched partitions emptied but untouched ones remain:
+            # the layout stays partitioned, so drop the flat empty file
+            shutil.rmtree(out)
+    for name in keep:
+        link_tree(os.path.join(prev, name), os.path.join(out, name))
+    return True

@@ -23,6 +23,7 @@ Two deliberate design rules:
 from __future__ import annotations
 
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -32,10 +33,26 @@ def write_partitioned(
     path: str,
     partition_cols: list[str],
     mode: str = "overwrite",
-) -> None:
-    """Write a hive-partitioned parquet table. Partition columns move
-    into directory names (and out of the data files)."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+) -> bool:
+    """Write a hive-partitioned parquet table with ONE file per
+    partition leaf: a shuffle on the partition columns lands every
+    leaf in exactly one task, so file counts stay bounded however the
+    input was split. Partition columns move into directory names (and
+    out of the data files).
+
+    A frame with no rows writes a flat parquet instead: a partitioned
+    write of zero rows leaves a directory no reader can infer a schema
+    from. The flat file keeps the partition columns as ordinary
+    columns, so readers and partition filters see the same schema and
+    simply find no rows. Returns whether the partitioned layout was
+    written."""
+    df.repartition(*partition_cols).write.mode(mode).partitionBy(
+        *partition_cols
+    ).parquet(path)
+    if any(n.startswith(f"{partition_cols[0]}=") for n in os.listdir(path)):
+        return True
+    df.write.mode(mode).parquet(path)
+    return False
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
@@ -70,8 +87,6 @@ def compact(
     file count, and let a partition-local repartition lay them out.
     The 128 MB default matches one HDFS/S3-friendly scan unit — small
     enough to parallelize, big enough to amortize footer/open costs."""
-    import os
-
     df = read_partitioned(spark, path)
     total_bytes = 0
     for f in df.inputFiles():

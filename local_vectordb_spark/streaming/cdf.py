@@ -50,11 +50,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from local_vectordb_spark.operators.incremental import (
-    apply_changes,
-    link_tree,
-)
+from local_vectordb_spark.operators.incremental import rewrite_partitions
 from local_vectordb_spark.sources.json_records import SCHEMAS
+from local_vectordb_spark.sources.partitioned import write_partitioned
 
 # Mirror partitioning width: rows live in hash buckets so a sync can
 # rewrite ONLY the buckets the feed touches and hard-link the rest —
@@ -309,16 +307,13 @@ def _commit_mirror_full(
     version: int,
     prev: int | None,
     n_buckets: int,
-    n_rows: int,
     timeline: str | None = None,
 ) -> None:
     """Bootstrap / 410-recovery commit: the whole snapshot, written
     once, hash-bucket partitioned so every LATER sync can rewrite
-    only touched buckets. An EMPTY snapshot (a reset table's fresh
-    generation) writes a plain schema-bearing parquet instead — a
-    partitionBy write with zero rows produces a directory no reader
-    can infer a schema from; later syncs see no ``bucket=`` dirs and
-    carry nothing, which is exactly right.
+    only touched buckets (an EMPTY snapshot — a reset table's fresh
+    generation — lands as write_partitioned's schema-bearing flat
+    parquet, which later syncs extend like any other generation).
 
     ``timeline`` pins WHOSE version line the cursor belongs to (the
     server's ``X-Timeline-Id``): ``n_buckets`` is immutable layout
@@ -331,12 +326,10 @@ def _commit_mirror_full(
     if timeline is not None:
         meta["timeline"] = timeline
     _write_meta(mirror_dir, meta)
-    target = _mirror_data_dir(mirror_dir, version)
-    if n_rows == 0:
-        df.write.mode("overwrite").parquet(target)
-    else:
-        df.withColumn("bucket", _bucket_expr(_mirror_n_buckets(mirror_dir))) \
-            .write.partitionBy("bucket").mode("overwrite").parquet(target)
+    write_partitioned(
+        df.withColumn("bucket", _bucket_expr(_mirror_n_buckets(mirror_dir))),
+        _mirror_data_dir(mirror_dir, version), ["bucket"],
+    )
     _point_cursor_and_gc(mirror_dir, version, prev)
 
 
@@ -349,52 +342,28 @@ def _apply_feed_bucketed(
     pin: int,
 ) -> int:
     """The cost ∝ churn sync (r15): the feed names its ids, ids name
-    their hash buckets, so the new generation REWRITES only the
-    touched buckets (partition-pruned read of exactly those
-    directories + the broadcast anti-join apply) and HARD-LINKS every
-    untouched bucket directory from the previous generation —
-    `link_tree`, the same file-level reuse the server's incremental
-    index artifacts ride. A full-corpus rewrite per poll (the naive
-    form) costs ∝ corpus at 100 TB no matter how small the delta;
-    this costs (touched buckets + churn). Returns the touched-bucket
+    their hash buckets, and the new generation is a
+    ``rewrite_partitions`` of those buckets — the same copy-on-write
+    writer the server's snapshot and index artifacts ride. A
+    full-corpus rewrite per poll (the naive form) costs ∝ corpus at
+    100 TB no matter how small the delta. Returns the touched-bucket
     count."""
-    n_buckets = _mirror_n_buckets(mirror_dir)
+    bucket = _bucket_expr(_mirror_n_buckets(mirror_dir))
+    touched = [
+        r.b for r in feed.select(bucket.alias("b")).distinct().collect()
+    ]  # churn-sized collect, never corpus-sized
+    # the feed's upserts are post-images and its ids name every row it
+    # replaces or removes — apply_changes' contract, per bucket
+    new_rows = feed.filter(F.col("change_type") == "upsert").select(
+        *[f.name for f in SCHEMAS[kind].fields]
+    ).withColumn("bucket", bucket)
     prev_dir = _mirror_data_dir(mirror_dir, since)
     new_dir = _mirror_data_dir(mirror_dir, pin)
-    touched = {
-        r.b
-        for r in feed.select(_bucket_expr(n_buckets).alias("b"))
-        .distinct().collect()
-    }  # churn-sized collect, never corpus-sized
-    existing = {
-        name for name in os.listdir(prev_dir) if name.startswith("bucket=")
-    }
-    touch_paths = [
-        os.path.join(prev_dir, f"bucket={b}")
-        for b in sorted(touched)
-        if f"bucket={b}" in existing
-    ]
-    if touch_paths:
-        base_touched = (
-            spark.read.option("basePath", prev_dir).parquet(*touch_paths)
-            .drop("bucket")
-        )
-    else:  # feed only names ids in buckets the mirror never held
-        base_touched = spark.createDataFrame([], SCHEMAS[kind])
-    out = apply_changes(base_touched, feed).withColumn(
-        "bucket", _bucket_expr(n_buckets)
-    )
-    out.write.partitionBy("bucket").mode("overwrite").parquet(new_dir)
-    for name in existing:
-        if int(name.split("=", 1)[1]) not in touched:
-            link_tree(os.path.join(prev_dir, name),
-                      os.path.join(new_dir, name))
-    if not any(n.startswith("bucket=") for n in os.listdir(new_dir)):
-        # the feed emptied the table (every row removed, nothing to
-        # link): a zero-row partitionBy dir carries no schema, so
-        # rewrite it as a plain empty parquet the reader can open
-        spark.createDataFrame([], SCHEMAS[kind]) \
-            .write.mode("overwrite").parquet(new_dir)
+    if not rewrite_partitions(spark, prev_dir, new_dir, ["bucket"], touched,
+                              feed.select("id"), new_rows):
+        # hash buckets are never null, so only a dir this module did
+        # not write gets here: refuse rather than advance the cursor
+        raise ValueError(f"{prev_dir}: not a bucketed mirror generation")
     _point_cursor_and_gc(mirror_dir, pin, prev=since)
     return len(touched)
 
@@ -510,8 +479,7 @@ def sync_mirror_once(
                     _auto_mirror_buckets(_snapshot_parquet_bytes(path))
                 )
                 _commit_mirror_full(snap, mirror_dir, head, prev=since,
-                                    n_buckets=nb, n_rows=n,
-                                    timeline=tid)
+                                    n_buckets=nb, timeline=tid)
                 return {"action": "bootstrapped", "since": since,
                         "served_version": head, "n_changes": n,
                         "touched_buckets": None,
@@ -524,7 +492,6 @@ def sync_mirror_once(
     if pin >= 0:
         _commit_mirror_full(snap, mirror_dir, pin, prev=since,
                             n_buckets=n_buckets or N_BUCKETS_DEFAULT,
-                            n_rows=len(rows),
                             timeline=tid)
         return {"action": "bootstrapped", "since": since,
                 "served_version": pin, "n_changes": len(rows),

@@ -59,6 +59,7 @@ _SLOW_TESTS = {
     "test_ivf_incremental_freezes_centroids_and_tracks_drift",
     "test_ivf_retrains_past_drift_budget",
     "test_nsw_rebuilds_past_drift_budget",
+    "test_search_after_deleting_every_chunk_returns_no_rows",
     # test_api_e2e.py — store/bundle lifecycle e2e
     "test_export_bundle_survives_source_gc",
     "test_ivf_index_invalidated_by_other_instance",

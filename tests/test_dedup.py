@@ -282,7 +282,8 @@ def test_simhash_votes_arrow_parity(spark, sf_dir):
     """The numpy mapInArrow vote kernel computes bit-identical
     signatures to the one-pass SQL aggregate on the real fixture
     corpus plus the edge rows (NULL / empty / whitespace-only /
-    single-token text), for BOTH hash families."""
+    single-token text) and a batch that ends in empty rows, for BOTH
+    hash families."""
     from local_vectordb_spark.session import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -295,14 +296,25 @@ def test_simhash_votes_arrow_parity(spark, sf_dir):
             (9_000_004, "one"),
         ],
     )
-    corpus = docs.unionByName(edges)
-    for fn in (dedup.simhash_signatures, dedup.simhash_signatures_portable):
-        arrow = {
-            r["doc_id"]: r["simhash"]
-            for r in fn(corpus, use_arrow=True).collect()
-        }
-        expr = {
-            r["doc_id"]: r["simhash"]
-            for r in fn(corpus, use_arrow=False).collect()
-        }
-        assert arrow == expr
+    # one partition, so one Arrow batch whose LAST rows are empty and
+    # NULL right after a multi-token row: that row's final token must
+    # still vote
+    tail = _docs(
+        spark,
+        [
+            (9_000_011, "alpha beta gamma delta epsilon"),
+            (9_000_012, ""),
+            (9_000_013, None),
+        ],
+    ).coalesce(1)
+    for corpus in (docs.unionByName(edges), tail):
+        for fn in (dedup.simhash_signatures, dedup.simhash_signatures_portable):
+            arrow = {
+                r["doc_id"]: r["simhash"]
+                for r in fn(corpus, use_arrow=True).collect()
+            }
+            expr = {
+                r["doc_id"]: r["simhash"]
+                for r in fn(corpus, use_arrow=False).collect()
+            }
+            assert arrow == expr

@@ -105,6 +105,82 @@ def test_compose_delta_chain_nets_out_intermediate_states(spark):
     assert got_final2 == {"a", "c"}
 
 
+# ---------- rewrite_partitions (the copy-on-write layout writer) ----------
+
+def _leaf_inodes(root, name):
+    d = os.path.join(root, name)
+    return {
+        os.stat(os.path.join(d, f)).st_ino
+        for f in os.listdir(d) if f.endswith(".parquet")
+    }
+
+
+def test_rewrite_partitions_rewrites_touched_and_links_the_rest(
+    spark, tmp_path
+):
+    """The one writer behind the data snapshot, the sign/IVF layouts
+    and the CDF mirror: touched partitions become prev − changed + new,
+    untouched ones are the SAME files (hard links), an emptied result
+    stays readable with its schema, and a hive null-partition dir
+    sends the caller to its wholesale path."""
+    from local_vectordb_spark.operators.incremental import rewrite_partitions
+    from local_vectordb_spark.sources.partitioned import write_partitioned
+
+    schema = "id string, v int, p int"
+    prev = str(tmp_path / "prev")
+    assert write_partitioned(spark.createDataFrame(
+        [("a", 1, 0), ("b", 2, 0), ("c", 3, 1), ("d", 4, 2)], schema
+    ).repartition(3), prev, ["p"])
+    # one file per leaf, however the input was split
+    assert all(len(_leaf_inodes(prev, f"p={p}")) == 1 for p in (0, 1, 2))
+
+    def ids(*xs):
+        return spark.createDataFrame([(x,) for x in xs], "id string")
+
+    def rows(path):
+        return {tuple(r) for r in
+                spark.read.parquet(path).select("id", "v", "p").collect()}
+
+    # update a, delete c, add e: partitions 0 and 1 touched
+    out = str(tmp_path / "out")
+    new = spark.createDataFrame([("a", 10, 0), ("e", 5, 1)], schema)
+    assert rewrite_partitions(
+        spark, prev, out, ["p"], [0, 1], ids("a", "c", "e"), new)
+    assert rows(out) == {("a", 10, 0), ("b", 2, 0), ("e", 5, 1), ("d", 4, 2)}
+    assert _leaf_inodes(out, "p=2") == _leaf_inodes(prev, "p=2")
+    assert _leaf_inodes(out, "p=0").isdisjoint(_leaf_inodes(prev, "p=0"))
+
+    # a touched partition that empties while others survive
+    drop_c = str(tmp_path / "drop_c")
+    assert rewrite_partitions(
+        spark, prev, drop_c, ["p"], [1], ids("c"), new.limit(0))
+    assert rows(drop_c) == {("a", 1, 0), ("b", 2, 0), ("d", 4, 2)}
+    assert not os.path.exists(os.path.join(drop_c, "p=1"))
+
+    # every row removed: a flat parquet that still carries the schema,
+    # which the next generation extends like any other
+    empty = str(tmp_path / "empty")
+    assert rewrite_partitions(
+        spark, out, empty, ["p"], [0, 1, 2], ids("a", "b", "d", "e"),
+        new.limit(0))
+    back = spark.read.parquet(empty)
+    assert back.count() == 0 and set(back.columns) == {"id", "v", "p"}
+    again = str(tmp_path / "again")
+    assert rewrite_partitions(
+        spark, empty, again, ["p"], [0], ids("a"), new.limit(1))
+    assert rows(again) == {("a", 10, 0)}
+
+    # null partition values route the caller to its wholesale path,
+    # with nothing written
+    os.makedirs(os.path.join(prev, "p=__HIVE_DEFAULT_PARTITION__"))
+    refused = str(tmp_path / "refused")
+    assert not rewrite_partitions(
+        spark, prev, refused, ["p"], [0], ids("a"), new)
+    assert not rewrite_partitions(
+        spark, out, refused, ["p"], [None], ids("a"), new)
+    assert not os.path.exists(refused)
+
+
 # ---------- delta recording on the write path ----------
 
 def test_crud_writes_record_their_delta(spark, tmp_path):
@@ -294,6 +370,19 @@ def test_sign_broken_chain_falls_back_to_full_build(spark, tmp_path, monkeypatch
     v = d._current_version("chunks")
     assert os.path.exists(os.path.join(
         str(tmp_path), "chunks", f"_sign_v{v}", "_SUCCESS"))
+
+
+def test_search_after_deleting_every_chunk_returns_no_rows(spark, tmp_path):
+    """Emptying the table after the stored indexes exist: the sign/sq8
+    layouts and the IVF artifact of the emptied generation must read
+    back as zero rows, exactly like the brute-force tier."""
+    d = _seed(spark, tmp_path, QUESTIONS)
+    for index_type in ("sign", "ivf", "sq8"):
+        d.search(QUESTIONS[0], index_type=index_type, k=3).collect()
+    d.delete("chunks", d.table("chunks").select("id"))
+    for index_type in ("sign", "sq8", "ivf", "cosine"):
+        got = d.search(QUESTIONS[0], index_type=index_type, k=3).count()
+        assert got == 0, index_type
 
 
 # ---------- IVF: frozen centroids, drift ledger, retrain ----------

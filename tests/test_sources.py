@@ -139,8 +139,10 @@ def test_compact_reduces_files_preserves_data(spark, tmp_path):
     src = str(tmp_path / "frag")
     out = str(tmp_path / "compacted")
     ev = _events_df(spark)
-    # fragmented layout: many small files per partition
-    P.write_partitioned(ev.repartition(16), src, ["event_type"])
+    # fragmented layout: many small files per partition, as an
+    # append-per-batch sink leaves it (write_partitioned itself writes
+    # one file per partition)
+    ev.repartition(16).write.partitionBy("event_type").parquet(src)
     n_before = len(P.read_partitioned(spark, src).inputFiles())
 
     P.compact(spark, src, out, ["event_type"], target_file_bytes=256 * 1024 * 1024)

@@ -255,15 +255,19 @@ class VectorDB:
         self._df_cache_max = 64
         self._tl_id: str | None = None
 
-    def _cached_parquet(self, path: str) -> DataFrame:
+    def _cached_parquet(self, path: str, schema=None) -> DataFrame:
+        """Cached read of an immutable artifact directory; ``schema``
+        skips the footer-inference job (used for the ``_delta`` sides,
+        which are always written in the table schema)."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         try:
             key = (path, os.stat(path).st_mtime_ns)
         except OSError:
             # missing dir: the plain read below raises AnalysisException
-            return self.spark.read.parquet(path)
+            return reader.parquet(path)
         df = self._df_cache.get(key)
         if df is None:
-            df = self.spark.read.parquet(path)
+            df = reader.parquet(path)
         else:
             del self._df_cache[key]  # re-insert: dict order is the LRU order
         self._df_cache[key] = df
@@ -486,23 +490,32 @@ class VectorDB:
                     f"a complete feed from v{since_version}; re-read "
                     f"the full snapshot instead"
                 )
-            steps.append(
-                (
-                    self._cached_parquet(os.path.join(dd, "upserts")),
-                    self._cached_parquet(os.path.join(dd, "removes")),
-                )
-            )
+            steps.append(self._read_delta(kind, dd))
         if not steps:  # since_version == target: an empty (valid) feed
             empty = self.spark.createDataFrame([], SCHEMAS[kind])
             return empty.select(
                 F.lit("upsert").alias("change_type"), "*"
             ).limit(0)
-        ups, olds = compose_delta_chain(steps, key_col="id")
+        if len(steps) == 1:
+            # one commit is already net: each side holds an id at most
+            # once (add/update reject repeated ids), so the chain's
+            # per-id windows would only add shuffles
+            ups, olds = steps[0]
+        else:
+            ups, olds = compose_delta_chain(steps, key_col="id")
         removes = olds.join(ups.select("id"), "id", "left_anti")
         return ups.select(
             F.lit("upsert").alias("change_type"), "*"
         ).unionByName(
             removes.select(F.lit("remove").alias("change_type"), "*")
+        )
+
+    def _read_delta(self, kind: str, dd: str) -> tuple[DataFrame, DataFrame]:
+        """The ``(upserts, removes)`` sides of a committed ``_delta``
+        dir, read in the table schema (no schema-inference job)."""
+        return (
+            self._cached_parquet(os.path.join(dd, "upserts"), SCHEMAS[kind]),
+            self._cached_parquet(os.path.join(dd, "removes"), SCHEMAS[kind]),
         )
 
     def _commit_pointer(self, kind: str, version: int) -> None:
@@ -551,10 +564,18 @@ class VectorDB:
         the row-level analogue of a Delta/Iceberg commit log's
         add/remove actions. A write with ``delta=None`` (reset, or any
         future bulk path) simply breaks the chain — consumers fall
-        back to a full build, never to a wrong one. The ``_OK`` marker
-        is written after both sides, and the whole ``_delta`` dir
-        rides the version directory's atomic rename, so a half-written
-        delta is never visible.
+        back to a full build, never to a wrong one.
+
+        The delta is written FIRST, into ``{stage}_delta`` (a sibling:
+        _write_data may rmtree or overwrite ``stage``), and read back
+        in the table schema; those two small files are the only input
+        of the incremental snapshot rewrite. The delta plan — FK
+        validation, duplicate checks, embedding, update merge — thus
+        runs once per commit, and the recorded delta and the snapshot
+        rewrite read the same bytes. The dir then moves into
+        ``stage/_delta`` and gets its ``_OK`` marker before the version
+        rename, so a half-written delta is never visible; a failed
+        commit removes both directories.
 
         Multi-writer guard: a non-blocking advisory flock on
         `_WRITE.lock` serializes the whole version-read → stage →
@@ -605,17 +626,21 @@ class VectorDB:
             ]
             nxt = max([base, *vers]) + 1
             stage = os.path.join(d, f"_stage_{uuid.uuid4().hex}")
+            delta_dir = f"{stage}_delta"
             try:
+                if delta is not None:
+                    sides = []
+                    for side, side_df in zip(("upserts", "removes"), delta):
+                        p = os.path.join(delta_dir, side)
+                        side_df.write.mode("overwrite").parquet(p)
+                        sides.append(
+                            self.spark.read.schema(SCHEMAS[kind]).parquet(p)
+                        )
+                    delta = tuple(sides)
                 self._write_data(kind, df, delta, base, stage)
                 if delta is not None:
-                    ups_df, rem_df = delta
                     dd = os.path.join(stage, "_delta")
-                    ups_df.write.mode("overwrite").parquet(
-                        os.path.join(dd, "upserts")
-                    )
-                    rem_df.write.mode("overwrite").parquet(
-                        os.path.join(dd, "removes")
-                    )
+                    os.rename(delta_dir, dd)
                     with open(os.path.join(dd, "_OK"), "w"):
                         pass
                 try:
@@ -627,6 +652,7 @@ class VectorDB:
                     ) from e
             except BaseException:
                 shutil.rmtree(stage, ignore_errors=True)
+                shutil.rmtree(delta_dir, ignore_errors=True)
                 raise
             self._commit_pointer(kind, nxt)
             self._version += 1
@@ -676,7 +702,10 @@ class VectorDB:
         rewrite 100 TB. The derivation new = prev − changed_ids +
         upserts is the SAME contract the incremental artifact builders
         and the CDF feed already rely on (the delta IS the net change
-        this commit applies — api._write's docstring).
+        this commit applies — api._write's docstring). ``delta`` is the
+        pair _write read back from the recorded ``_delta`` files, so
+        the touched buckets, the changed ids and the new rows all come
+        from those two small files, never from the commit's plan.
 
         Wholesale writes (delta=None — reset, initial bulk load — or a
         flat/differently-bucketed previous generation, a corpus that
@@ -743,11 +772,12 @@ class VectorDB:
             ups, rem = delta
             cols = [f.name for f in SCHEMAS[kind].fields]
             try:
-                changed = ups.select("id").unionByName(
-                    rem.select("id")).distinct()
+                changed = ups.select("id").unionByName(rem.select("id"))
+                # one partition: the distinct needs no shuffle over
+                # these delta-sized files
                 touched = [
                     r.b for r in changed.select(bucket_of.alias("b"))
-                    .distinct().collect()
+                    .coalesce(1).distinct().collect()
                 ]
                 if rewrite_partitions(
                     self.spark, prev_dir, stage, ["bucket"], touched,
@@ -841,42 +871,71 @@ class VectorDB:
             ),
         )
 
+    def _checked(
+        self, kind: str, rows: DataFrame, base: DataFrame | None = None
+    ) -> tuple[DataFrame, DataFrame]:
+        """Split a write batch into ``(accepted, rejected)`` in ONE
+        materialization. Rejected rows carry a ``reject_reason``:
+        ``'duplicate_id'`` for every copy of an id repeated within the
+        batch and, when ``base`` is given (insert), for an id already
+        in it; ``'missing_parent'`` for an FK violator (see
+        _validated: ``base`` None is an update, where a null FK
+        passes). Accepted rows come back embedded (E1).
+
+        Both sides are cut from one localCheckpoint, taken before the
+        commit overwrites the files the plan reads: the validation
+        joins and the embedder run once per row, however many actions
+        (recorded delta, snapshot) later read the accepted rows."""
+        rows, repeated = crud.reject_repeats(rows, "id")
+        rows, fk_rejected = self._validated(
+            kind, rows, allow_null_fk=base is None
+        )
+        parts = [repeated.withColumn("reject_reason", F.lit("duplicate_id"))]
+        if base is not None:
+            rows, dup = crud.reject_duplicates(base, rows, "id")
+            parts.append(dup.withColumn("reject_reason", F.lit("duplicate_id")))
+        if kind in _PARENTS:  # FK-less kinds can't produce violators
+            parts.append(
+                fk_rejected.withColumn("reject_reason", F.lit("missing_parent"))
+            )
+        tagged = self._embedded(kind, rows).withColumn(
+            "reject_reason", F.lit(None).cast("string")
+        )
+        for part in parts:
+            tagged = tagged.unionByName(part)
+        tagged = tagged.localCheckpoint(eager=True)
+        reason = F.col("reject_reason")
+        return (
+            tagged.filter(reason.isNull()).drop("reject_reason"),
+            tagged.filter(reason.isNotNull()),
+        )
+
     def add(self, kind: str, rows: DataFrame) -> DataFrame:
         """C4 insert (+C8 FK, +C9 duplicate rejection, +E1 embed).
         Returns EVERY rejected row — duplicates AND FK violators —
         tagged with a `reject_reason` column ('duplicate_id' |
-        'missing_parent'); empty when all inserted. The reference 400s
+        'missing_parent'); empty when all inserted. An id repeated
+        within the batch is rejected in every copy. The reference 400s
         the whole request on either condition (src/main.py:110-114,
         221-232); batch semantics keep valid rows but never silently
         drop the bad ones (r9 verdict #1)."""
         base_v, base = self._snapshot(kind)
-        rows, fk_rejected = self._validated(kind, rows)
-        accepted, dup_rejected = crud.reject_duplicates(base, rows, "id")
+        accepted, rejected = self._checked(kind, rows, base)
         # The commit timestamp is a PYTHON literal, not
-        # F.current_timestamp(): the snapshot write and the _delta
-        # write are two separate Spark actions over this plan, and
-        # current_timestamp resolves per-action — the recorded delta's
-        # created_at/updated_at would silently diverge from the
-        # committed snapshot's, corrupting every downstream mirror
-        # built from the change feed (r13 ADVICE). A literal makes the
-        # plan deterministic, so both actions commit identical bytes.
+        # F.current_timestamp(), which resolves per action: on the
+        # wholesale path the snapshot (``df``) and the recorded delta
+        # are still two actions over this plan, and both must commit
+        # identical bytes, or every mirror built from the change feed
+        # drifts (r13 ADVICE).
         # AWARE (UTC), not naive (r14 ADVICE): Spark interprets a naive
         # datetime in spark.sql.session.timeZone — if that differs from
         # the machine's local zone, the absolute commit instant is
         # skewed by the offset. An aware value names one instant under
         # any session configuration.
         now = F.lit(_dt.datetime.now(_dt.timezone.utc))
-        accepted = self._embedded(kind, accepted).withColumn(
+        accepted = accepted.withColumn(
             "created_at", F.coalesce("created_at", now)
         ).withColumn("updated_at", F.coalesce("updated_at", now))
-        rejected = dup_rejected.withColumn("reject_reason", F.lit("duplicate_id"))
-        if kind in _PARENTS:  # FK-less kinds can't produce violators
-            rejected = rejected.unionByName(
-                fk_rejected.withColumn("reject_reason", F.lit("missing_parent"))
-            )
-        # materialize before the overwrite invalidates the files this
-        # lazy plan reads from
-        rejected = rejected.localCheckpoint(eager=True)
         self._write(
             kind,
             crud.insert_append(base, accepted.select(*base.columns)),
@@ -887,11 +946,11 @@ class VectorDB:
             # delta would be the whole corpus (doubling the bulk-load
             # write), and no index artifact can predate the first
             # commit, so there is nothing a chain could extend.
+            # The empty side is cut from the snapshot read: an empty
+            # createDataFrame is a Python RDD whose write starts
+            # Python workers for nothing.
             delta=(
-                (
-                    accepted.select(*base.columns),
-                    self.spark.createDataFrame([], SCHEMAS[kind]),
-                )
+                (accepted.select(*base.columns), crud.truncate(base))
                 if base_v >= 0
                 else None
             ),
@@ -918,47 +977,45 @@ class VectorDB:
         src/main.py:295-299). A null FK keeps the base row's parent; a
         NON-null FK naming a missing parent rejects that row — returned
         tagged `reject_reason='missing_parent'`, never silently dropped
-        (reference 400s, src/main.py:295-299 via get_document)."""
-        updates, fk_rejected = self._validated(kind, updates, allow_null_fk=True)
-        updates = self._embedded(kind, updates)
-        # Python-literal AWARE timestamp, NOT current_timestamp: the
-        # merged snapshot and its recorded delta are written by two
-        # separate actions, which must see the same value (r13 ADVICE),
-        # and a naive datetime would be re-interpreted in the session
+        (reference 400s, src/main.py:295-299 via get_document). An id
+        repeated within the batch is rejected in every copy, tagged
+        `reject_reason='duplicate_id'`."""
+        updates, rejected = self._checked(kind, updates)
+        # Python-literal AWARE timestamp, NOT current_timestamp: on the
+        # wholesale path the merged snapshot and its recorded delta are
+        # two actions, which must see the same value (r13 ADVICE), and
+        # a naive datetime would be re-interpreted in the session
         # timezone (r14 ADVICE — see add)
         now = F.lit(_dt.datetime.now(_dt.timezone.utc))
         updates = updates.withColumn("updated_at", now)
         if "created_at" in updates.columns:
             updates = updates.drop("created_at")  # preserved from base
-        rejected = fk_rejected.withColumn("reject_reason", F.lit("missing_parent"))
-        if kind in _PARENTS:
-            # materialize before the overwrite invalidates these files
-            rejected = rejected.localCheckpoint(eager=True)
         base_v, base = self._snapshot(kind)
-        merged = crud.upsert(base, updates, "id").select(*base.columns)
-        # an updated id absent from base is a pure INSERT: it has no
-        # base created_at to preserve, so it takes the commit stamp —
-        # a NULL created_at row would poison every CDF consumer's
-        # freshness logic downstream (r14)
-        merged = merged.withColumn(
-            "created_at", F.coalesce("created_at", now)
-        )
+
+        def merge(rows: DataFrame) -> DataFrame:
+            # an updated id absent from base is a pure INSERT: it has
+            # no base created_at to preserve, so it takes the commit
+            # stamp — a NULL created_at row would poison every CDF
+            # consumer's freshness logic downstream (r14)
+            return crud.upsert(rows, updates, "id").select(
+                *base.columns
+            ).withColumn("created_at", F.coalesce("created_at", now))
+
         # delta (r13): the updated ids' MERGED rows on the upsert side
         # and their pre-update base rows on the remove side (an update
         # can move a row's index partition — new embedding → new sign
         # bucket / IVF cell — so the old row must be named too). An
         # updated id absent from base is a pure insert: upsert side
-        # only. Each side is one id-semi-join pass, within the COW
-        # write path's existing cost envelope.
-        upd_ids = updates.select("id").distinct()
+        # only. The upsert side merges only the touched base rows (the
+        # update's ids broadcast, so the corpus is scanned but never
+        # shuffled); the full merge is only planned for the wholesale
+        # path.
+        touched = base.join(F.broadcast(updates.select("id")), "id", "semi")
         self._write(
             kind,
-            merged,
+            merge(base),
             expected_version=base_v,
-            delta=(
-                merged.join(upd_ids, "id", "semi"),
-                base.join(upd_ids, "id", "semi"),
-            ),
+            delta=(merge(touched), touched),
         )
         return rejected
 
@@ -973,8 +1030,8 @@ class VectorDB:
             # name the index partitions the next incremental build
             # must rewrite); keys not present in base net to nothing
             delta=(
-                self.spark.createDataFrame([], SCHEMAS[kind]),
-                base.join(keys.select("id"), "id", "semi"),
+                crud.truncate(base),  # see add
+                base.join(F.broadcast(keys.select("id")), "id", "semi"),
             ),
         )
         child = _CHILDREN.get(kind)
@@ -1822,16 +1879,7 @@ class VectorDB:
                     # paths (r13 ADVICE). Full build, immediately.
                     return None
                 try:
-                    steps.append(
-                        (
-                            self.spark.read.parquet(
-                                os.path.join(dd, "upserts")
-                            ),
-                            self.spark.read.parquet(
-                                os.path.join(dd, "removes")
-                            ),
-                        )
-                    )
+                    steps.append(self._read_delta(kind, dd))
                 except AnalysisException:
                     # lost the delta to the retention GC between the
                     # marker check and the read — a RACE, not a proof:

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -101,6 +101,22 @@ def reject_duplicates(
     accepted = incoming.join(keys, key_col, "left_anti")
     rejected = incoming.join(keys, key_col, "left_semi")
     return accepted, rejected
+
+
+def reject_repeats(
+    incoming: DataFrame, key_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """C9 within one batch: (accepted, rejected), rejecting EVERY copy
+    of a key that occurs more than once in ``incoming`` — no copy is
+    preferred, so the split is the same however often the plan runs.
+    One shuffle on the key (a window count), shared by both sides."""
+    n = incoming.withColumn(
+        "_n", F.count(F.lit(1)).over(Window.partitionBy(key_col))
+    )
+    return (
+        n.filter(F.col("_n") == 1).drop("_n"),
+        n.filter(F.col("_n") > 1).drop("_n"),
+    )
 
 
 def truncate(df: DataFrame) -> DataFrame:

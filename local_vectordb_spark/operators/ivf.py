@@ -155,7 +155,16 @@ def ivf_build(
     100 TB corpus per iteration is the part of flat IVF that stops
     scaling first; centroids from a few-million-row sample converge to
     the same cell structure, the standard train-on-sample practice)
-    while transform() — one cheap pass — still assigns EVERY row."""
+    while transform() — one cheap pass — still assigns EVERY row.
+
+    The fit input is put in an order fixed by the ids alone: KMeans's
+    k-means|| init draws per partition, in row order, so rows in the
+    order a shuffle happened to fetch them gave a different model per
+    run. The rows are hash-partitioned on the id into
+    ``spark.sql.shuffle.partitions`` partitions and sorted by id within
+    them (a global ``orderBy`` would not do: its range bounds come from
+    a sample seeded by the RDD id, which depends on what ran before in
+    the session). The sample is drawn by id hash for the same reason."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -164,7 +173,12 @@ def ivf_build(
     )
     fit_on = feat
     if n_rows is not None and n_rows > TRAIN_SAMPLE_MAX:
-        fit_on = feat.sample(TRAIN_SAMPLE_MAX / n_rows, seed=seed)
+        fit_on = feat.filter(
+            F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(1 << 30))
+            < int(TRAIN_SAMPLE_MAX / n_rows * (1 << 30))
+        )
+    n_parts = int(feat.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    fit_on = fit_on.repartition(n_parts, id_col).sortWithinPartitions(id_col)
     model = KMeans(k=n_clusters, seed=seed, featuresCol="features").fit(fit_on)
     assignments = model.transform(feat).select(
         F.col(id_col), F.col("prediction").alias("cluster_id")

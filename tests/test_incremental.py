@@ -15,8 +15,10 @@ import json
 import os
 import uuid
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DoubleType
 
 import local_vectordb_spark.api as api_mod
 from local_vectordb_spark.api import VectorDB
@@ -268,6 +270,151 @@ def test_recorded_delta_is_byte_identical_to_the_commit(spark, tmp_path):
     # and the inserted row's created_at IS that commit's stamp
     assert live["c1"].updated_at > live["c100"].updated_at
     assert live["c200"].created_at == live["c200"].updated_at
+
+
+def _counting_embedder(spark):
+    """A deterministic embedder that counts the rows it embeds."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf(ArrayType(DoubleType()))
+    def embed(texts: pd.Series) -> pd.Series:
+        calls.add(len(texts))
+        return pd.Series(
+            [[float(len(t or "")), float(sum(map(ord, t or ""))), 1.0]
+             for t in texts]
+        )
+
+    return embed, calls
+
+
+def test_commit_embeds_each_row_once(spark, tmp_path):
+    """A commit's accepted rows are materialized once and its delta is
+    read back from disk, so the embedder runs once per added or updated
+    row, not once per use of the plan."""
+    embed, calls = _counting_embedder(spark)
+    d = VectorDB(spark, str(tmp_path), embedder=embed)
+    # parents written directly: only the chunk commits are under test
+    d._write("libraries", spark.createDataFrame(
+        [("lib0", {}, None, None, "l")], SCHEMAS["libraries"]))
+    d._write("documents", spark.createDataFrame(
+        [("d0", {}, None, None, "d", "lib0")], SCHEMAS["documents"]))
+    d.add("chunks", spark.createDataFrame(
+        _chunk_rows(QUESTIONS[:4], start=0), SCHEMAS["chunks"]))
+
+    # the first delta commit re-lays the table out wholesale ...
+    calls.value = 0
+    d.add("chunks", spark.createDataFrame(
+        _chunk_rows(QUESTIONS[4:9], start=4), SCHEMAS["chunks"]))
+    assert calls.value == 5
+
+    # ... and the next one rewrites only the buckets its delta touches
+    calls.value = 0
+    d.update("chunks", spark.createDataFrame(
+        [(f"c{i}", None, None, None, f"new text {i}", None, None)
+         for i in (1, 5, 7)],
+        SCHEMAS["chunks"]))
+    assert calls.value == 3
+    assert d.get("chunks", "c7").first().content == "new text 7"
+
+
+def _libs(spark, *rows):
+    return spark.createDataFrame(
+        [(i, {"k": n}, None, None, n) for i, n in rows], SCHEMAS["libraries"])
+
+
+def test_failed_commit_leaves_no_stage_and_no_version(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that fails after its delta and data are staged removes
+    both staging dirs and publishes nothing; the next commit succeeds."""
+    d = VectorDB(spark, str(tmp_path))
+    d.add("libraries", _libs(spark, ("L", "l")))
+    tdir = os.path.join(str(tmp_path), "libraries")
+    v0 = d._current_version("libraries")
+    before = sorted(os.listdir(tdir))
+    orig = VectorDB._write_data
+    seen = []
+
+    def failing(self, kind, df, delta, base, stage):
+        seen.append(os.path.exists(os.path.join(f"{stage}_delta", "removes")))
+        orig(self, kind, df, delta, base, stage)
+        raise RuntimeError("injected")
+
+    monkeypatch.setattr(VectorDB, "_write_data", failing)
+    with pytest.raises(RuntimeError, match="injected"):
+        d.add("libraries", _libs(spark, ("M", "m")))
+    assert seen == [True]  # the delta was written before the data
+    assert d._current_version("libraries") == v0
+    assert sorted(os.listdir(tdir)) == before
+    assert not [e for e in os.listdir(tdir) if e.startswith("_stage_")]
+
+    monkeypatch.setattr(VectorDB, "_write_data", orig)
+    d.add("libraries", _libs(spark, ("M", "m")))
+    assert d._current_version("libraries") == v0 + 1
+    assert sorted(r.id for r in d.table("libraries").collect()) == ["L", "M"]
+    assert [r.id for r in d.table_changes("libraries", v0).collect()] == ["M"]
+
+
+def test_one_step_feed_matches_the_composed_chain(spark, tmp_path):
+    """table_changes over a single commit reads that commit's delta
+    directly; it must equal compose_delta_chain's net change."""
+    d = VectorDB(spark, str(tmp_path))
+    d._write("libraries", _libs(spark, ("A", "a"), ("B", "b"), ("C", "c")))
+    store = os.path.join(str(tmp_path), "libraries")
+
+    def rows(df):
+        return sorted(
+            df.withColumn("metadata", F.to_json("metadata")).collect())
+
+    commits = (
+        lambda: d.add("libraries", _libs(spark, ("D", "d"), ("E", "e"))),
+        # a true update and an insert-via-update
+        lambda: d.update("libraries", _libs(spark, ("A", "a2"), ("F", "f"))),
+        lambda: d.delete("libraries", spark.createDataFrame(
+            [("B",), ("D",), ("nope",)], "id string")),
+    )
+    for commit in commits:
+        v = d._current_version("libraries")
+        commit()
+        dd = os.path.join(store, f"v{v + 1}", "_delta")
+        ups, olds = compose_delta_chain([
+            (spark.read.parquet(os.path.join(dd, "upserts")),
+             spark.read.parquet(os.path.join(dd, "removes"))),
+        ])
+        composed = ups.select(
+            F.lit("upsert").alias("change_type"), "*"
+        ).unionByName(
+            olds.join(ups.select("id"), "id", "left_anti")
+            .select(F.lit("remove").alias("change_type"), "*"))
+        got = rows(d.table_changes("libraries", v))
+        assert got == rows(composed)
+        assert got  # every commit above changes something
+
+
+def test_ids_repeated_within_a_batch_are_rejected(spark, tmp_path):
+    """add and update reject every copy of an id repeated within the
+    batch, so the snapshot keeps one row per id and the change feed
+    matches it."""
+    d = VectorDB(spark, str(tmp_path))
+    d.add("libraries", _libs(spark, ("L", "l")))
+    v0 = d._current_version("libraries")
+    rejected = d.add(
+        "libraries", _libs(spark, ("M", "m"), ("X", "x1"), ("X", "x2")))
+    assert sorted(
+        (r.id, r.name, r.reject_reason) for r in rejected.collect()
+    ) == [("X", "x1", "duplicate_id"), ("X", "x2", "duplicate_id")]
+    assert sorted(r.id for r in d.table("libraries").collect()) == ["L", "M"]
+    assert sorted(
+        (r.change_type, r.id)
+        for r in d.table_changes("libraries", v0).collect()
+    ) == [("upsert", "M")]
+
+    rejected = d.update(
+        "libraries", _libs(spark, ("M", "m1"), ("M", "m2"), ("L", "l2")))
+    assert sorted((r.id, r.reject_reason) for r in rejected.collect()) == [
+        ("M", "duplicate_id"), ("M", "duplicate_id")]
+    live = {r.id: r.name for r in d.table("libraries").collect()}
+    assert live == {"L": "l2", "M": "m"}
 
 
 # ---------- sign layout: parity + file reuse ----------
